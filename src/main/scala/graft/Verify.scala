@@ -38,7 +38,9 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // run query dumps concurrently: Spark's scheduler interleaves the jobs
     // across the local cores, cutting wall time ~3x vs sequential (the
-    // queries are independent; failures stay per-query)
+    // queries are independent; failures stay per-query). Each dump runs
+    // in its own cache scope — the lifecycle Bench measures — so one
+    // thread's release never touches another's caches.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -47,8 +49,8 @@ object Verify {
       else SparkEntry.queries.filter { case (n, _) => only(n) }
     val futures = selected.toSeq.map { case (name, fn) =>
       scala.concurrent.Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        try graft.ops.Caching.scope(fn(spark, sfDir).coalesce(1).write
+          .mode("overwrite").parquet(s"$outDir/$name"))
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }

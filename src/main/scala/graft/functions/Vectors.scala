@@ -63,7 +63,7 @@ object Vectors {
     * Deliberately a primitive-array JVM kernel, not an expression: the
     * nPlanes × dim FMA sweep unrolled as a literal expression chain falls
     * out of whole-stage codegen past ~100 terms and evaluates interpreted
-    * (round-1 Profile.scala measurement — the kernel is ~10× faster at
+    * (round-1 measurement — the kernel is ~10× faster at
     * 6 planes × 64 dims). Accumulation order matches the old expression
     * form (left fold per plane), so bucket assignments are unchanged. */
   def hyperplaneBucket(v: Column, nPlanes: Int, seed: Int, dim: Int = 64): Column = {

@@ -12,80 +12,102 @@ import org.apache.spark.sql.DataFrame
   * accumulate, LRU eviction churns, and later queries pay unpredictable
   * GC.
   *
-  * [[materializeAndRelease]] closes the lifecycle inside the builder: the
-  * result is eagerly materialized via `localCheckpoint(eager = true)` —
-  * which truncates lineage, so the caller's action reads the checkpointed
-  * blocks and never the about-to-be-released cache — then every
-  * intermediate is unpersisted immediately, even if the job fails.
+  * [[materializeAndRelease]] closes the lifecycle, in one of two ways
+  * decided by whether a [[scope]] is open on the calling thread:
+  *
+  *  - Inside a scope (Bench, Verify's pool futures, the pipelines.* batch
+  *    jobs), the result is returned lazily CACHED — a composed
+  *    kernel's consumers still reuse one materialization — and the result
+  *    and its intermediates are registered with the scope, which
+  *    unpersists them when it exits (or at [[release]]), after the
+  *    caller's action. This skips the eager checkpoint job and its
+  *    result-block round trip (measured ~16 % of wall across the
+  *    checkpoint-pattern queries at sf0.1). A cached-but-not-checkpointed
+  *    result can be RECOMPUTED under memory pressure; every registered
+  *    builder's plan is deterministic by repo doctrine (seeded fits,
+  *    md5-derived sampling), so recompute changes nothing — do not
+  *    register a nondeterministic plan.
+  *  - Outside any scope, the call is its own scope: the result is eagerly
+  *    materialized via `localCheckpoint(eager = true)` — which truncates
+  *    lineage, so the caller's action reads the checkpointed blocks and
+  *    never the about-to-be-released cache — then every intermediate is
+  *    unpersisted immediately, even if the job fails.
+  *
+  * Scopes are per thread, so concurrent callers never release each
+  * other's registrations; [[SessionArtifacts.inParallel]] installs the
+  * caller's scope on its pool threads. Spark's CacheManager keys cache
+  * entries by plan, so two scopes that cache the SAME plan share one
+  * entry — the first release drops it and the other side recomputes it
+  * (same answer, deterministic plans).
   *
   * Scale notes: checkpoint blocks are RESULT-sized (every registered query
   * returns a reduced frame — per-doc stats, pair lists, top-k reports),
   * not corpus-sized, and they are freed automatically by Spark's
   * ContextCleaner once the returned frame becomes unreachable — nothing
-  * accrues for the life of the session. Eager materialization inside the
-  * builder keeps Bench fair (the builder call sits inside the timed
-  * region). At production scale, swap localCheckpoint for a reliable
-  * checkpoint directory if executor loss must be survivable mid-query —
-  * same trade documented at [[ConnectedComponents]].
+  * accrues for the life of the session. At production scale, swap
+  * localCheckpoint for a reliable checkpoint directory if executor loss
+  * must be survivable mid-query — same trade documented at
+  * [[ConnectedComponents]]. Results are identical on every path; only
+  * the cache lifecycle differs.
   */
 object Caching {
   /** Session conf switch: when "true", return the LAZY result unchanged
-    * (no checkpoint, no unpersist). For PLAN INSPECTION only — the
-    * checkpointed return is a LogicalRDD scan, which would blind a plan
-    * audit (PlanAuditSpec) to the real shuffle/join/pushdown shape of the
-    * computation. Results are identical either way; only the cache
-    * lifecycle differs, so flipping it never changes answers. */
+    * (no checkpoint, no cache, no registration). For PLAN INSPECTION only
+    * — the checkpointed return is a LogicalRDD scan, which would blind a
+    * plan audit (PlanAuditSpec) to the real shuffle/join/pushdown shape
+    * of the computation. */
   val PassthroughKey = "graft.caching.passthrough"
 
-  /** Session conf switch (r21, optimization guide §1.2 driver work):
-    * when "true", [[materializeAndRelease]] skips the EAGER
-    * `localCheckpoint` — which costs one extra job + a result-block
-    * serialize/write/read per query (measured ~16 % of wall across the
-    * checkpoint-pattern queries at sf0.1) — and instead returns the
-    * result lazily CACHED (so a composed kernel's consumers still reuse
-    * one materialization) while registering result + intermediates for
-    * [[releasePending]], which the driving loop calls AFTER its action.
-    * Correct for any SINGLE-THREADED build→act→release loop (Bench, and
-    * the pipelines.* batch drivers since r22); concurrent drivers
-    * (Verify's pool) keep the default eager mode — one thread's release
-    * must not evict another's in-flight caches. The `pending` queue is
-    * deliberately process-global, NOT thread-local: a single-threaded
-    * drive loop may build artifacts through SessionArtifacts.inParallel
-    * (pool threads register; the driving thread releases after its
-    * action) — under the single-threaded-driver contract that is safe,
-    * under a concurrent driver it is exactly why DeferKey must stay off.
-    * One more caveat vs the eager localCheckpoint (r21 ADVICE): a
-    * cached-but-not-checkpointed result can be RECOMPUTED under memory
-    * pressure; every registered builder's plan is deterministic by repo
-    * doctrine (seeded fits, md5-derived sampling), so recompute changes
-    * nothing here — do not register a nondeterministic plan.
-    * Results are identical either way (lifecycle only). */
-  val DeferKey = "graft.caching.deferRelease"
+  /** The frames registered under one [[scope]]. Concurrent: pool threads
+    * running under the scope register into it. */
+  private[ops] type Scope = java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
 
-  private val pending =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  private val open = new ThreadLocal[Scope]
 
-  def materializeAndRelease(result: DataFrame, intermediates: DataFrame*): DataFrame = {
-    val conf = result.sparkSession.conf
-    if (conf.get(PassthroughKey, "false") == "true") result
-    else if (conf.get(DeferKey, "false") == "true") {
-      val cached = result.cache()
-      intermediates.foreach(pending.add)
-      pending.add(cached)
-      cached
-    } else
-      try result.localCheckpoint(true)
-      finally intermediates.foreach(_.unpersist())
+  /** Runs `body` (build → act) with a fresh scope open on this thread;
+    * everything registered in it is unpersisted when `body` returns or
+    * throws. Scopes nest: the enclosing one is restored on exit. */
+  def scope[T](body: => T): T = {
+    val s = new Scope
+    within(Some(s))(try body finally drain(s))
   }
 
-  /** Release every frame registered under [[DeferKey]] mode. Called by
-    * the sequential driving loop after its action; a no-op when nothing
-    * is pending (eager mode registers nothing). */
-  def releasePending(): Unit = {
-    var df = pending.poll()
+  /** The scope open on this thread, if any — captured by thread pools
+    * and re-installed on their threads through [[within]]. */
+  private[ops] def current: Option[Scope] = Option(open.get)
+
+  /** Runs `body` with `s` installed as this thread's scope (no scope
+    * when `None`); the thread's previous scope is restored on exit.
+    * Releasing stays with whoever opened `s`. */
+  private[ops] def within[T](s: Option[Scope])(body: => T): T = {
+    val prev = open.get
+    open.set(s.orNull)
+    try body finally open.set(prev)
+  }
+
+  /** Unpersists everything registered so far in this thread's scope,
+    * which stays open — a batch pipeline's stage boundary, after the
+    * stage's action. A no-op outside a scope. */
+  def release(): Unit = current.foreach(drain)
+
+  private def drain(s: Scope): Unit = {
+    var df = s.poll()
     while (df != null) {
-      try df.unpersist() catch { case _: Throwable => () }
-      df = pending.poll()
+      try df.unpersist() catch { case scala.util.control.NonFatal(_) => () }
+      df = s.poll()
     }
   }
+
+  def materializeAndRelease(result: DataFrame, intermediates: DataFrame*): DataFrame =
+    if (result.sparkSession.conf.get(PassthroughKey, "false") == "true") result
+    else current match {
+      case Some(s) =>
+        val cached = result.cache()
+        intermediates.foreach(s.add)
+        s.add(cached)
+        cached
+      case None =>
+        try result.localCheckpoint(true)
+        finally intermediates.foreach(_.unpersist())
+    }
 }

@@ -498,7 +498,11 @@ object Relational {
     * counts since the query landed).
     * q80: approx_percentile(…, 1000) guarantees a rank within
     * ⌈n/1000⌉ of the exact target rank ⌈q·n⌉ — the band is the VALUE at
-    * those rank offsets, per group; lang and n must match exactly. */
+    * those rank offsets, per group; lang and n must match exactly.
+    *
+    * Both bands are calibrated to the certified corpora (sf0.01 and the
+    * sf0.1 bench set): a band failure on new data means "recalibrate the
+    * band" against that data's exact answer, not a widening to pass. */
   private[graft] def oracleTolerance: Map[String, String] = Map(
     "q62_approx_distinct" ->
       """SELECT

@@ -92,17 +92,20 @@ object SessionArtifacts {
     * failure surface as the sequential loop). Thunks that route through
     * [[dir]] stay build-once under concurrency (the Holder serializes
     * forcing). Pool capped at 4: per guide §2.6, 2–3 jobs in flight is
-    * enough to fill the tail without the fits fighting for executors. */
+    * enough to fill the tail without the fits fighting for executors.
+    * Pool threads run under the caller's [[Caching.scope]], so their
+    * cache registrations are released with the caller's. */
   def inParallel[T](thunks: Seq[() => T]): Seq[T] =
     if (thunks.sizeIs <= 1) thunks.map(_())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(thunks.size, 4))
+      val scope = Caching.current
       try {
         import scala.concurrent.{Await, ExecutionContext, Future}
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
         Await.result(
-          Future.traverse(thunks)(t => Future(t())),
+          Future.traverse(thunks)(t => Future(Caching.within(scope)(t()))),
           scala.concurrent.duration.Duration.Inf)
       } finally pool.shutdown()
     }

@@ -89,7 +89,7 @@ object Similarity {
     *
     * The kernel stays on primitive arrays in JVM code — measured 25-80×
     * faster than HOF aggregate / unrolled codegen / Seq-typed UDF forms for
-    * dense pair math (round-1 Profile.scala). Double-widened so results are
+    * dense pair math (round-1 measurement). Double-widened so results are
     * bit-comparable to the DuckDB oracle. */
   val q43CosinePairs: Q = (s, d) =>
     cosinePairsExact(s, d)
@@ -101,10 +101,6 @@ object Similarity {
     * edges come from [[ivfCellPairEdges]] instead (index-backed, prunes);
     * this sweep remains q43's explicit exact-pair surface and the test
     * oracle the index-backed generator is checked against. */
-  /** Profiling hook (tools.ProfileCC). */
-  def cosinePairsForProfile(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = cosinePairsExact(s, d)
-
   private[ops] def cosinePairsExact(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
@@ -408,9 +404,9 @@ object Similarity {
   val q45AnnIvf: Q = (s, d) => {
     // nCells ~ √N at this sf (grows as √N so cell size stays bounded);
     // nProbe 16 + 2-way member replication: uniform (clusterless)
-    // embeddings are IVF's worst case — the r6/r7 sweep on sf0.1
-    // (tools.ExperimentIvf): probe 12 single-assign → 0.81 top-1
-    // agreement; probe 12 rep 2 → 0.946; probe 16 rep 2 → 0.982 (the r7
+    // embeddings are IVF's worst case — the r6/r7 sweep on sf0.1: probe
+    // 12 single-assign → 0.81 top-1 agreement; probe 12 rep 2 → 0.946;
+    // probe 16 rep 2 → 0.982 (the r7
     // pick — beats both rep 3's 0.988-at-3×-storage and the second-hop
     // probe expansion's 0.969-at-two-passes for 4 extra probed cells).
     // At 100 TB the schedule is [[probeSchedule]] (fraction-of-cells with

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Caching, ConnectedComponents, Multimodal}
+import graft.pipelines.Pipelines.timed
 import graft.sources.ShardExport
 
 /** END-TO-END media training-data preparation — the multimodal twin of
@@ -62,13 +63,8 @@ object MediaData {
       gate: Multimodal.MediaGateConfig = Multimodal.MediaGateConfig(),
       quarantineDir: Option[String] = None,
       nearDup: Boolean = true, hashBits: Int = 64,
-      histDir: Option[String] = None): DataFrame = {
+      histDir: Option[String] = None): DataFrame = Caching.scope {
     import spark.implicits._
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     // ONE decode pass: admission + gate metadata + perceptual hash
     val profile = Multimodal.decodeProfile(media).cache()
     val (nInput, tInput) = timed(profile.count())
@@ -94,12 +90,17 @@ object MediaData {
 
     // exact tier (q139): one groupBy on the 64-bit key
     val exactKeep = gated.groupBy(col("ahash")).agg(min(col("doc_id")).as("keep_id"))
+    // distinct-hash representatives, read by both sides of the near tier's
+    // band self-join; released once the deduped stage is materialized. The
+    // near tier returns a plain plan, not a Caching registration:
+    // dedupKeep caches that same plan, so the stage's release of the
+    // registration would drop dedupKeep's cache with it
+    val reps = exactKeep.select(col("ahash"), col("keep_id").as("rep")).cache()
     val keepIds =
       if (!nearDup) exactKeep.select(col("keep_id").as("doc_id"))
       else {
         // near tier (q144's image arm): distinct-hash representative
         // edges -> components; each component keeps its min doc
-        val reps = exactKeep.select(col("ahash"), col("keep_id").as("rep")).cache()
         val hamMax = Multimodal.phashHamMax(hashBits) // lattice-aware radius
         // probe-vs-exact self-join (the q144 discipline): one side
         // multi-probes at 64-bit, the other stays one exact row per band
@@ -114,17 +115,15 @@ object MediaData {
           .filter(bit_count(col("ha").bitwiseXOR(col("hb"))) <= hamMax)
           .select(col("doc_a"), col("doc_b"))
         val cc = ConnectedComponents.run(nearEdges)
-        val kept = Caching.materializeAndRelease(
-          exactKeep.select(col("keep_id").as("doc_id"))
-            .join(cc.select(col("vertex").as("doc_id"), col("label")), Seq("doc_id"), "left")
-            .withColumn("comp", coalesce(col("label"), col("doc_id")))
-            .groupBy(col("comp")).agg(min(col("doc_id")).as("doc_id"))
-            .select(col("doc_id")),
-          reps)
-        kept
+        exactKeep.select(col("keep_id").as("doc_id"))
+          .join(cc.select(col("vertex").as("doc_id"), col("label")), Seq("doc_id"), "left")
+          .withColumn("comp", coalesce(col("label"), col("doc_id")))
+          .groupBy(col("comp")).agg(min(col("doc_id")).as("doc_id"))
+          .select(col("doc_id"))
       }
     val dedupKeep = keepIds.cache()
     val (nDeduped, tDeduped) = timed(dedupKeep.count())
+    reps.unpersist()
 
     // export: rewrite ONLY the keepers' bytes, hash-sharded + bounded
     val (exportPath, tExport) = timed(

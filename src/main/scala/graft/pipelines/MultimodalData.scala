@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
 import graft.ops.{BloomSketch, Caching, Multimodal, Scoring, TextOps}
+import graft.pipelines.Pipelines.timed
 import graft.sources.ShardExport
 
 /** The UNIFIED multimodal capstone — one funnel over documents that
@@ -102,13 +103,8 @@ object MultimodalData {
       retentionScores: Option[DataFrame] = None,
       tokenReportDir: Option[String] = None,
       componentHistDir: Option[String] = None,
-      gateVennDir: Option[String] = None): DataFrame = {
+      gateVennDir: Option[String] = None): DataFrame = Caching.scope {
     import spark.implicits._
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     val input = docs.cache()
     val (nInput, tInput) = timed(input.count())
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
 import graft.ops.{BloomSketch, Caching, Dedup, Scoring, TextOps}
+import graft.pipelines.Pipelines.timed
 import graft.sources.ShardExport
 
 /** END-TO-END training-data preparation — the full composition a
@@ -135,39 +136,14 @@ object TrainingData {
       pplSmoothing: String = "add1",
       decontam: String = "drop",
       tokenReportDir: Option[String] = None,
-      decontamReportDir: Option[String] = None): DataFrame = {
+      decontamReportDir: Option[String] = None): DataFrame = Caching.scope {
     require(decontam == "drop" || decontam == "scrub",
       s"decontam must be 'drop' or 'scrub', got '$decontam'")
     import spark.implicits._
-    // stage timer: wall-clock of the ONE action that materializes a
-    // cached stage — the per-stage scaling signal ScaleSmoke's pipeline
-    // section reads (a stage whose secs stop tracking its input volume is
-    // the fixed bottleneck the funnel must not have)
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      // deferred-mode bookkeeping: each stage is FULLY materialized by
-      // its one timed action, so intermediates the composed operators
-      // registered (signature tables, span tables, pair verifies) can be
-      // released here — later stages read this stage's own cache, never
-      // a released intermediate (a re-read would recompute, correctly,
-      // from deterministic plans)
-      Caching.releasePending()
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    // deferred cache release (r21 verdict #3 — promoted out of bench-only):
-    // this run is the canonical SINGLE-THREADED build → act → release
-    // sequential batch driver, exactly the shape Caching.DeferKey is
-    // correct for — composed operators' intermediates stay lazily cached
-    // until the stage action completes instead of paying an eager
-    // localCheckpoint job (one extra job + result-block round trip) inside
-    // every builder; measured ~16 % of wall on checkpoint-pattern queries
-    // at sf0.1. Results are identical (lifecycle only). The previous conf
-    // is restored on exit; concurrent drivers (Verify's thread pool) keep
-    // the default eager mode.
-    val deferPrev = spark.conf.getOption(Caching.DeferKey)
-    spark.conf.set(Caching.DeferKey, "true")
-    try {
+    // the run is one cache scope: composed operators' intermediates stay
+    // lazily cached until their stage's timed action completes instead of
+    // paying an eager localCheckpoint job inside every builder (Caching
+    // doc); report writers' registrations go when the scope exits
     val input = docs.cache()
     val (nInput, tInput) = timed(input.count())
 
@@ -314,14 +290,5 @@ object TrainingData {
     checked.unpersist()
     input.unpersist()
     summary
-    } finally {
-      // release anything the report writers registered after the last
-      // timed stage, then hand the session back in its caller's mode
-      Caching.releasePending()
-      deferPrev match {
-        case Some(v) => spark.conf.set(Caching.DeferKey, v)
-        case None    => spark.conf.unset(Caching.DeferKey)
-      }
-    }
   }
 }

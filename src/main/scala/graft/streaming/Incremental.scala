@@ -1369,7 +1369,7 @@ object Incremental {
           .groupBy(col("source"), col("term"))
           .agg(count(lit(1)).as("n"))
           .withColumn("tbkt", pmod(
-            xxhash64(concat_ws(" ", col("source"), col("term"))),
+            xxhash64(concat_ws("\u0000", col("source"), col("term"))),
             lit(nBuckets.toLong)))
           .cache()
         val nTok = toks.groupBy(col("source"))

@@ -26,9 +26,14 @@ object InflateDataset {
     new java.io.File(out).mkdirs()
     val docs = graft.Tables.documents(spark, base)
     val cols = docs.columns
+    // copies stay disjoint only while every base doc_id is below the
+    // per-copy offset
+    val offset = 10_000_000L
+    val maxId = docs.agg(max(col("doc_id"))).head().getAs[Number](0).longValue
+    require(maxId < offset, s"max doc_id $maxId is not below the per-copy offset $offset")
     val scaled = (0 until mult).map { k =>
       docs.select(cols.map {
-        case "doc_id" => (col("doc_id") + lit(k * 10_000_000L)).as("doc_id")
+        case "doc_id" => (col("doc_id") + lit(k * offset)).as("doc_id")
         case "text"   => regexp_replace(col("text"), "(\\w+)", s"c${k}_$$1").as("text")
         case c        => col(c)
       }: _*)
@@ -38,6 +43,9 @@ object InflateDataset {
         "orders", "lineitem", "events", "embeddings")) {
       val src = java.nio.file.Paths.get(s"$base/$t.parquet")
       if (java.nio.file.Files.exists(src)) {
+        // Files.copy of a directory (a Spark-written table) would copy
+        // only the empty directory
+        require(java.nio.file.Files.isRegularFile(src), s"$src is not a single parquet file")
         val dst = java.nio.file.Paths.get(s"$out/$t.parquet")
         java.nio.file.Files.copy(src, dst,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)

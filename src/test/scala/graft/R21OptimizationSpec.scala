@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Caching, Dedup, Multimodal}
+import graft.ops.{Dedup, Multimodal}
 
 /** Focused pins for the r21 optimization round's operator-internal
   * changes: each test asserts the optimized form computes EXACTLY what
@@ -56,25 +56,6 @@ class R21OptimizationSpec extends AnyFunSuite {
     val bands = Multimodal.withPhashBands(in, 16)
       .select("doc_id", "band", "bhash").collect().map(_.toSeq).toSet
     assert(probes == bands)
-  }
-
-  test("Caching.deferRelease returns identical results and releasePending unpersists") {
-    import spark.implicits._
-    val base = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k")
-    def build(): org.apache.spark.sql.DataFrame = {
-      val mid = base.groupBy("k").agg(count(lit(1)).as("n")).cache()
-      Caching.materializeAndRelease(mid.agg(sum(col("n")).as("t")), mid)
-    }
-    val eager = build().collect().toSeq
-    spark.conf.set(Caching.DeferKey, "true")
-    try {
-      val lazyRes = build()
-      assert(lazyRes.collect().toSeq == eager)
-      // the deferred result is cached until released
-      assert(lazyRes.storageLevel.useMemory || lazyRes.storageLevel.useDisk)
-      Caching.releasePending()
-      assert(lazyRes.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    } finally spark.conf.unset(Caching.DeferKey)
   }
 
   test("the persisted exact-Jaccard artifact equals the inline prefix-filter join") {

@@ -4,14 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Caching, Dedup}
+import graft.ops.Dedup
 
 /** Focused pins for the r22 optimization round's operator-internal
   * changes: the dedup-family session artifacts (signature tables, the
   * LSH pair set, the substr scrub table, the per-K decontam tables) must
-  * serve EXACTLY what the inline per-query passes computed, and the
-  * pipeline's deferred-release promotion must leave the session the way
-  * it found it. */
+  * serve EXACTLY what the inline per-query passes computed. */
 class R22OptimizationSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder().master("local[4]")
@@ -80,25 +78,5 @@ class R22OptimizationSpec extends AnyFunSuite {
     val injected = Dedup.cleanCorpus(docs, precomputedPairs = Some(pairs))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(injected == inline)
-  }
-
-  test("TrainingData.run restores the caller's deferRelease mode") {
-    import spark.implicits._
-    val docs = (0L until 40L).map(i =>
-        (i, s"document number $i with some words the gate can count " * 8,
-          s"src${i % 2}"))
-      .toDF("doc_id", "text", "source")
-      .withColumn("n_chars", length(col("text")))
-    val evalDocs = Seq((1000L, "held out eval sentence that matches nothing"))
-      .toDF("doc_id", "text")
-    val weights = Seq(("src0", 1L, "ff"), ("src1", 1L, "ff"))
-      .toDF("source", "base_copies", "thr")
-    val out = java.nio.file.Files.createTempDirectory("r22-td").toString
-    assert(spark.conf.getOption(Caching.DeferKey).isEmpty)
-    graft.pipelines.TrainingData.run(spark, docs, evalDocs, weights, out,
-      nShards = 2, pplGate = false)
-    // the run enables deferred release internally and must hand the
-    // session back unset (it was unset before)
-    assert(spark.conf.getOption(Caching.DeferKey).isEmpty)
   }
 }
